@@ -22,11 +22,13 @@ import graft.stg.Staging
   * the reference repo ships only the continuous series — the operator
   * chain is exactly the reference's.
   *
-  * Usage: runMain graft.Pipeline [outDir]
+  * Usage: runMain graft.Pipeline [outDir]. The reference checkout is
+  * found at `$GRAFT_REFERENCE_DIR` ([[Tables.referenceDir]]).
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_pipeline")
+    val srcPath = Tables.referencePath("Data Sample/KC=F.csv")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -38,7 +40,6 @@ object Pipeline {
     val t0 = System.currentTimeMillis()
 
     // ---- E1: staging ------------------------------------------------
-    val srcPath = "/root/reference/Data Sample/KC=F.csv"
     val rawLines = Tables.rawLineCount(spark, srcPath)
     val ohlcv = Tables.readOhlcvCsv(spark, srcPath)
     val staged = ohlcv.filter($"Close".isNotNull)

@@ -177,6 +177,8 @@ object Staged {
           return df
       }
     }
-    s.read.parquet(path.toString)
+    // stage paths are content-addressed, so the cached schema of a
+    // stage version never goes stale
+    graft.sources.Tables.parquet(s, path.toString)
   }
 }

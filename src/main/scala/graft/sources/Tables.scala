@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -17,16 +21,54 @@ import org.apache.spark.sql.types._
   *
   * Scale note: all readers return an un-materialized scan; column pruning
   * and predicate pushdown stay available to Catalyst because no action or
-  * cache happens here.
+  * cache happens here. Source reads go through [[parquet]], which resolves
+  * a file's schema once per file version (path, size, mtime of every file
+  * under it) and inference settings, so a repeated read launches no
+  * footer-inference job. Sink read-backs (audit trail, stream stores,
+  * `Pipeline` outputs, partitioned round trips) deliberately stay on plain
+  * `read.parquet`: there the round trip itself is under test. ScaleSpec
+  * counts the remaining raw sites.
   */
 object Tables {
 
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Inferred schemas keyed by file version and inference settings,
+    * shared JVM-wide because streams run in `newSession()`s. */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  /** A fresh relation over the parquet source at `path` (new attribute
+    * ids, current file listing) read with its cached schema: only the
+    * first read of a file version pays Spark's footer-inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** The schema Spark infers for the parquet source at `path`, resolved once
+    * per file version. The key holds every file under `path` with its
+    * size and mtime, plus the session confs that change parquet
+    * inference (`nanosAsLong`, which [[events]] sets, and
+    * `spark.sql.parquet.*`). Two racing first reads may both infer; the
+    * results are identical. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val root = new Path(path)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .toSeq.sorted
+    val confs = spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k == "spark.sql.legacy.parquet.nanosAsLong" }
+      .sorted
+    val key = (files ++ confs.map { case (k, v) => s"$k=$v" }).mkString("\n")
+    Option(schemas.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.putIfAbsent(key, inferred)
+      inferred
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = read(s, d, "nation")
@@ -74,15 +116,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 
-  /** Register every test table as a temp view so `spark.sql` works too.
-    * `events` goes through [[events]] (ns-timestamp handling), never the
-    * raw reader. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, sfDir) else read(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
-
   /** S2: raw line count of a text source (header included) — the
     * reference's `pd.read_csv(header=None).shape[0]` reconciliation
     * input (`ETL Process/STG.py:86`). */
@@ -103,6 +136,27 @@ object Tables {
     * `ETL Process/ODS.py:19-26`) as Spark SQL databases. */
   def ensureDatabases(spark: SparkSession, dbs: Seq[String] = Seq("stg", "ods")): Unit =
     dbs.foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
+
+  /** Root of the reference repository checkout (golden extracts, sample
+    * data): `$GRAFT_REFERENCE_DIR`, else the default location. */
+  def referenceDir: String =
+    sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
+  /** The reference files among `rels` (relative to [[referenceDir]]) that
+    * are absent, as absolute paths. */
+  def missingReference(rels: Seq[String]): Seq[String] =
+    rels.map(r => Paths.get(referenceDir, r)).filterNot(Files.exists(_))
+      .map(_.toString)
+
+  /** Absolute path of a reference file; fails with one message naming
+    * the file when it is absent. */
+  def referencePath(rel: String): String = {
+    missingReference(Seq(rel)).foreach { p =>
+      throw new java.io.FileNotFoundException(
+        s"reference input missing: $p (set GRAFT_REFERENCE_DIR to the reference checkout)")
+    }
+    Paths.get(referenceDir, rel).toString
+  }
 
   // --------------------------------------------------------------------
   // Reference-shaped schemas (golden-parity substrate, FIXTURES.md §A)

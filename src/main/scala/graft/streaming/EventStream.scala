@@ -677,13 +677,13 @@ object EventStream {
     * readStream needs an explicit schema, and the physical `ts` type has
     * shipped in two forms across testdata generations (INT64 NANOS read
     * as LONG under the legacy conf, or TIMESTAMP(MICROS) read as NTZ) —
-    * so sniff the footer of the batch reader once and declare the stream
-    * schema to match, normalizing to a micros TimestampType either way
+    * so take the footer schema (resolved once per file version by
+    * Tables.schemaOf) and declare the stream schema to match, normalizing to a micros TimestampType either way
     * (see Tables.events for the full story). */
   private def rawEvents(spark: SparkSession, sfDir: String) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.types._
-    val physical = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val physical = Tables.schemaOf(spark, s"$sfDir/events.parquet")
     val stream = spark.readStream
       .schema(physical)
       .option("pathGlobFilter", "events.parquet")
@@ -887,8 +887,7 @@ object EventStream {
     val ss = streamSession(spark, 8)
     val clusters = graft.operators.TextOps.q50DedupClusters(ss, sfDir)
       .select($"doc_id".as("c_doc_id"), $"canonical_id", $"cluster_size")
-    val schema = ss.read
-      .parquet(s"$sfDir/documents.parquet")
+    val schema = Tables.parquet(ss, s"$sfDir/documents.parquet")
       .select($"doc_id", $"lang", $"source", $"n_chars").schema
     val stream = ss.readStream
       .schema(schema)
@@ -941,7 +940,7 @@ object EventStream {
     val store = graft.util.Scratch.freshDir("inc_lsh_stream", sfDir)
     val bandsDir = s"$store/bands"
     val pairsDir = s"$store/pairs"
-    val schema = ss.read.parquet(s"$sfDir/documents.parquet").schema
+    val schema = Tables.schemaOf(ss, s"$sfDir/documents.parquet")
     val stream = ss.readStream
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")

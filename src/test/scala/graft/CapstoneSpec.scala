@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec is the one that fails if any golden invariant breaks on the
   * actual end-to-end run over the actual file.
   */
-class CapstoneSpec extends AnyFunSuite {
+class CapstoneSpec extends AnyFunSuite with ReferenceInputs {
+
+  protected val referenceFiles: Seq[String] = Seq("Data Sample/KC=F.csv")
 
   private val outDir =
     java.nio.file.Files.createTempDirectory("graft_capstone").toString

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.mart.Extracts
+import graft.sources.Tables
 
 /** Golden-parity suite (SURVEY.md §5): the reference's golden extract
   * CSVs (`Data Processed` directory) are internally consistent; feeding
   * them through this engine's mart operators must reproduce each other
   * value-exactly. Reference files are read-only inputs here.
   */
-class GoldenParitySpec extends AnyFunSuite {
+class GoldenParitySpec extends AnyFunSuite with ReferenceInputs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +22,14 @@ class GoldenParitySpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val goldenDir = "/root/reference/Data Processed"
+  private val goldenFiles = Seq("NY prices.csv", "Spead.csv", "MA50 MA200.csv",
+    "COT_Long by date_actual and player.csv",
+    "COT_Short by date_actual and player (1).csv",
+    "COT_Short by date_actual and player (2).csv",
+    "CO_Net and Short by date_actual.csv")
+  private val kcf = "Data Sample/KC=F.csv"
+  protected val referenceFiles: Seq[String] =
+    goldenFiles.map(f => s"Data Processed/$f") :+ kcf
 
   /** Read a golden CSV: header on (BOM sidestepped by positional rename),
     * CRLF tolerated by the parser. */
@@ -29,7 +37,7 @@ class GoldenParitySpec extends AnyFunSuite {
     val df = spark.read
       .option("header", "true")
       .option("inferSchema", "true")
-      .csv(s"$goldenDir/$name")
+      .csv(Tables.referencePath(s"Data Processed/$name"))
     df.toDF(cols: _*)
   }
 
@@ -147,8 +155,7 @@ class GoldenParitySpec extends AnyFunSuite {
   }
 
   test("KC=F.csv reads with literal-null handling: 5957 rows, 100 null closes") {
-    val kc = graft.sources.Tables.readOhlcvCsv(
-      spark, "/root/reference/Data Sample/KC=F.csv")
+    val kc = Tables.readOhlcvCsv(spark, Tables.referencePath(kcf))
     assert(kc.count() === 5957)
     assert(kc.filter(col("Close").isNull).count() === 100)
     assert(kc.filter(col("Date").isNull).count() === 0)

@@ -515,24 +515,26 @@ class ScaleSpec extends AnyFunSuite {
         "registered here with the axis that bounds it")
   }
 
+  /** Matches of `pattern` per main source file (relative path). */
+  private def countSites(pattern: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val found = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".scala")) {
+        val n = pattern.r
+          .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p))).size
+        if (n > 0) found(root.relativize(p).toString) = n
+      }
+    }
+    found.toMap
+  }
+
   test("crossJoin and driver collect() sites stay inside their registered budgets") {
     // the other two audited scale-killer classes: a crossJoin that is
     // not against a broadcast metadata-sized relation is an all-pairs
     // bomb, and a .collect() in an operator is a driver-side loop.
     // Same ratchet as the window allowlist — drift fails until the new
     // site is argued and registered.
-    def countSites(pattern: String): Map[String, Int] = {
-      val root = java.nio.file.Paths.get("src/main/scala/graft")
-      val found = scala.collection.mutable.Map.empty[String, Int]
-      java.nio.file.Files.walk(root).forEach { p =>
-        if (p.toString.endsWith(".scala")) {
-          val n = pattern.r
-            .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p))).size
-          if (n > 0) found(root.relativize(p).toString) = n
-        }
-      }
-      found.toMap
-    }
     // every crossJoin is against a broadcast() 1-row aggregate or a
     // metadata-sized constant relation (centroids, codebooks, totals)
     val crossJoinBudget = Map(
@@ -661,6 +663,28 @@ class ScaleSpec extends AnyFunSuite {
       s"collect_list/collect_set sites drifted " +
         s"(found ${countSites("collect_(list|set)\\(")}): argue the new " +
         "site's per-key bound (cap BEFORE the aggregation), then register it")
+  }
+
+  test("raw read.parquet only at registered sink read-back sites") {
+    // a source read goes through Tables.parquet / Tables.schemaOf, which
+    // resolve the schema once per file version; a raw read.parquet runs
+    // a footer-inference job on every call. Raw reads stay only where
+    // the engine reads back what it just wrote, where the round trip is
+    // itself under test and the files change between reads
+    val sinkReadBacks = Map(
+      "sources/Tables.scala" -> (1, "the helper's own once-per-version inference"),
+      "stg/Staging.scala" -> (1, "q171's audit trail"),
+      "operators/Scale.scala" -> (1, "q193's partitioned write round trip"),
+      "Pipeline.scala" -> (3,
+        "the staging store as upsert target, its swapped-in copy, the fact output"),
+      "streaming/EventStream.scala" -> (13,
+        "stream stores: drainToParquet, the upsert sink's target and " +
+          "result, the incremental-LSH band and pair stores, q288's " +
+          "heavy-hitter store, q289's CMS store, q287's SPRT snapshot"))
+    val pattern = "\\.read\\s*\\.parquet\\("
+    assert(countSites(pattern) === sinkReadBacks.view.mapValues(_._1).toMap,
+      s"raw read.parquet sites drifted (found ${countSites(pattern)}): read " +
+        "sources through Tables.parquet; register only sink read-backs")
   }
 
   test("q162 shared passages: native fp arrays, no char-grain explode or window") {
