@@ -678,8 +678,9 @@ object EventStream {
     * shipped in two forms across testdata generations (INT64 NANOS read
     * as LONG under the legacy conf, or TIMESTAMP(MICROS) read as NTZ) —
     * so take the footer schema (resolved once per file version by
-    * Tables.schemaOf) and declare the stream schema to match, normalizing to a micros TimestampType either way
-    * (see Tables.events for the full story). */
+    * Tables.schemaOf) and declare the stream schema to match,
+    * normalizing to a micros TimestampType either way (see Tables.events
+    * for the full story). */
   private def rawEvents(spark: SparkSession, sfDir: String) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.types._
